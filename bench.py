@@ -232,11 +232,8 @@ def apply_once(cores: int, scratch: str, tag: str) -> list[float]:
     spark = make_spark(cores, f"bench-cdc-{tag}", local_dir, worker_reuse=True)
     warm_tbl = os.path.join(scratch, f"warm_{tag}")
     shutil.rmtree(warm_tbl, ignore_errors=True)
-    persist_light = os.environ.get("BENCH_PERSIST_LIGHT", "0") == "1"
     CDCEngine(
-        spark, wal, warm_tbl,
-        config=EngineConfig(epoch_size=100_000, n_buckets=64, table_mode="mor",
-                            persist_light=persist_light),
+        spark, wal, warm_tbl, config=EngineConfig(epoch_size=100_000, n_buckets=64),
     ).run(up_to_seq=min(100_000, CDC_EVENTS))
     passes = []
     for p in range(APPLY_PASSES):
@@ -244,8 +241,7 @@ def apply_once(cores: int, scratch: str, tag: str) -> list[float]:
         shutil.rmtree(table, ignore_errors=True)
         engine = CDCEngine(
             spark, wal, table,
-            config=EngineConfig(epoch_size=CDC_EVENTS, n_buckets=64, table_mode="mor",
-                                persist_light=persist_light),
+            config=EngineConfig(epoch_size=CDC_EVENTS, n_buckets=64),
         )
         t0 = time.time()
         engine.run()

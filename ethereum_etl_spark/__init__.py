@@ -16,12 +16,15 @@ Architecture (Spark-first, NOT a port):
                          byte-identical pure-Python reference twin
 - ``operators.lww``    — key-partitioned last-writer-wins dedup (window
                          ranking, agg-based, and salted two-phase variants)
-- ``operators.snapshot_table`` — Iceberg-style copy-on-write bucketed
-                         parquet table with JSON manifests + atomic ledger
+- ``operators.snapshot_table`` — Iceberg-style bucketed parquet table
+                         (merge-on-read deltas + compaction) with JSON
+                         manifests + atomic ledger
 - ``operators.merge``  — MERGE INTO semantics (upsert/delete) against a
                          SnapshotTable, version-aware
-- ``plans.engine``     — the epoch loop: plan → read → extract → dedup →
-                         merge → lineage, with exactly-once resume
+- ``plans.engine``     — the epoch loop: plan → read → dedup → extract →
+                         delta write → lineage, with exactly-once resume
+                         (``plans.multi`` runs the same loop over a group
+                         commit of several tables)
 - ``streaming.tailer`` — continuous tail of an append-only WAL directory
 - ``functions.textstats / dedupe / similarity / multimodal`` — the
                          training-data-pipeline operator family

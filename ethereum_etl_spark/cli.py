@@ -38,7 +38,7 @@ def _add_engine_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--table", required=True, help="SnapshotTable root directory")
     p.add_argument("--epoch-size", type=int, default=50_000)
     p.add_argument("--n-buckets", type=int, default=32)
-    p.add_argument("--lww-method", default="auto", choices=["auto", "agg", "salted", "window"])
+    p.add_argument("--lww-method", default="auto", choices=["auto", "agg", "salted"])
     p.add_argument("--n-salt", type=int, default=16)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--schema-changes", default=None, metavar="PATH",
@@ -396,7 +396,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "compact":
         depth_before = engine.table.delta_depth()
-        sid = engine.table.compact_buckets(
+        sid = engine.table.compact_groups(
             tombstone_retention_seqs=engine.config.tombstone_retention_seqs
         )
         expired = (

@@ -235,7 +235,7 @@ def table_changes(
             f
             for f in snap_a.files
             if (f.kind == "base" and f.bucket in buckets)
-            or (f.kind == "delta" and (f.group in groups or f.group == -1))
+            or (f.kind == "delta" and f.group in groups)
         ]
         a_payload = table._read_files(a_files, snap_b.schema_version).select(
             "seq", *payload_cols

@@ -37,67 +37,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOMBSTONE_COL = "__deleted"
-_PRIO = "__src_prio"
-
-
-def merge_union_lww(
-    target: DataFrame | None,
-    source: DataFrame,
-    key_col: str,
-    version_cols: Sequence[str],
-    data_cols: Sequence[str],
-    broadcast_winners: bool = False,
-) -> DataFrame:
-    """MERGE as LWW over (target ∪ batch) — the payload-light plan.
-
-    ``broadcast_winners`` defaults to False (winners = one row per key =
-    a driver OOM at real key counts if force-broadcast; AQE decides from
-    runtime stats). Opt in only with a known-bounded key count.
-
-    Upsert-with-version-guard is exactly "latest version per key wins"
-    over the union of current rows and batch rows. Physical win: the
-    winner computation is a partial-aggregated ``max(struct(version))``
-    over tiny (key, version) tuples, and payloads are fetched back by a
-    (broadcast) join of winners — so html bytes cross the wire at most
-    once (for the bucket rewrite), never through the merge join itself.
-    A source-priority tiebreak makes an exact (key, version) collision
-    (event redelivery) resolve deterministically to the batch row.
-    """
-    src = source.select(*data_cols).withColumn(_PRIO, F.lit(1))
-    if target is None:
-        return src.drop(_PRIO)
-    both = target.select(*data_cols).withColumn(_PRIO, F.lit(0)).unionByName(src)
-    ver_cols = [*version_cols, _PRIO]
-    winners = (
-        both.groupBy(key_col)
-        .agg(F.max(F.struct(*[F.col(c).alias(c) for c in ver_cols])).alias("__v"))
-        .select(key_col, *[F.col(f"__v.{c}").alias(c) for c in ver_cols])
-    )
-    if broadcast_winners:
-        winners = F.broadcast(winners)
-    # payload-light winner fetch: the winner computation above reads only
-    # (key, version) — Catalyst prunes columns through the union — and
-    # the full rows are then fetched by PER-SIDE semi-joins, so the
-    # payload columns are only ever the probe side of a (broadcastable)
-    # join and never shuffle on the composite merge key. (The previous
-    # formulation joined the unioned FULL rows against winners, which
-    # hashed every payload byte through the merge shuffle.) The _PRIO
-    # component keeps exact (key, version) redelivery collisions
-    # resolving to the batch row: each side only claims winners carrying
-    # its own priority.
-    tgt_w = target.select(*data_cols).join(
-        winners.filter(F.col(_PRIO) == 0).drop(_PRIO),
-        on=[key_col, *version_cols],
-        how="left_semi",
-    )
-    src_w = source.select(*data_cols).join(
-        winners.filter(F.col(_PRIO) == 1).drop(_PRIO),
-        on=[key_col, *version_cols],
-        how="left_semi",
-    )
-    return tgt_w.unionByName(src_w)
-
 
 def merge_resolve(
     target: DataFrame | None,

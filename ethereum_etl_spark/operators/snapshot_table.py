@@ -7,13 +7,14 @@ _restore/free_space`` — src/repositories/sqlite/base.py:81-135,152-175,
 event.py:58-80). The sandbox has no Iceberg/Delta jars, so we implement the
 same *semantics* dependency-free:
 
-- **Immutable data files**, hash-bucketed by key (``xxhash64(url) %
-  n_buckets``) so an upsert epoch rewrites only the buckets its keys touch
-  (copy-on-write), never the whole table. At 100 TB, an epoch touching 1%
-  of keys reads/writes ~1% of buckets.
+- **Immutable data files**: base files hash-bucketed by key
+  (``xxhash64(url) % n_buckets``) plus merge-on-read delta files fanned
+  into compaction groups, so an epoch appends only its own rows and a
+  compaction rewrites one group, never the whole table. Tables merged
+  by touched-bucket copy-on-write (the multi-table host_stats dim)
+  rewrite only the buckets their keys touch.
 - **Manifests**: JSON per snapshot listing (file, bucket, schema_version,
-  rows, bytes). A snapshot = carried-over files of untouched buckets +
-  newly written files.
+  rows, bytes). A snapshot = carried-over files + newly written files.
 - **Atomic ledger**: the ONLY commit point. ``ledger.jsonl`` is an
   append-only, fsync'd JSONL log: a commit is ONE ``write()`` of one
   ``\n``-terminated line, so per-epoch commit cost is O(1) — at the
@@ -25,8 +26,7 @@ same *semantics* dependency-free:
   a crash are simply unreferenced (invisible). This is the write-ahead
   discipline that makes every epoch idempotent and the whole stream
   exactly-once. On a real cluster this log becomes an Iceberg catalog /
-  metastore CAS swap; the protocol is identical. (Tables written by
-  earlier builds keep their ``ledger.json`` as a read-only prefix.)
+  metastore CAS swap; the protocol is identical.
 - **Schema evolution**: each file records the schema version it was
   written under; reads group files by version and upgrade (add-column →
   null fill, rename → projection) to the current schema — the Iceberg
@@ -71,13 +71,11 @@ class AppendLog:
     the tail is partial — ``entries()`` stops at the first unterminated
     or undecodable line, and the next ``append()`` truncates the torn
     bytes before writing. Single-writer (one driver), like the rest of
-    the table. An optional legacy ``{"entries": [...]}`` JSON file is
-    honored as a read-only prefix so pre-JSONL tables keep replaying.
+    the table.
     """
 
-    def __init__(self, jsonl_path: str, legacy_json_path: str | None = None):
+    def __init__(self, jsonl_path: str):
         self.jsonl_path = jsonl_path
-        self.legacy_json_path = legacy_json_path
         self._entries: list[dict] | None = None
         self._valid_bytes = 0  # bytes of jsonl known to hold whole lines
 
@@ -85,9 +83,6 @@ class AppendLog:
         if self._entries is not None:
             return
         entries: list[dict] = []
-        if self.legacy_json_path and os.path.exists(self.legacy_json_path):
-            with open(self.legacy_json_path) as f:
-                entries.extend(json.load(f)["entries"])
         self._valid_bytes = 0
         if os.path.exists(self.jsonl_path):
             with open(self.jsonl_path, "rb") as f:
@@ -190,7 +185,7 @@ class DataFile:
     #: compaction group for delta files (bucket = -1 on those): deltas are
     #: partitioned MAP-SIDE into `n_delta_groups` groups by key hash, so
     #: compaction rewrites one group (≈ table/n_groups) at a time instead
-    #: of the whole table. -1 = base file or legacy spanning delta.
+    #: of the whole table. -1 = base file.
     group: int = -1
     #: version-column (warc_ts) bounds in epoch MICROSECONDS, lifted from
     #: the parquet footer at register time (the Iceberg per-file
@@ -218,7 +213,8 @@ class Snapshot:
 
 
 class SnapshotTable:
-    """Bucketed copy-on-write parquet table with manifest/ledger commits."""
+    """Bucketed parquet table (base files + merge-on-read deltas) with
+    manifest/ledger commits."""
 
     def __init__(
         self,
@@ -238,7 +234,7 @@ class SnapshotTable:
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
         # bucketing params are a property of the TABLE, not the session:
-        # a mismatched n_buckets would break copy-on-write file pruning
+        # a mismatched n_buckets would break bucket file pruning
         # (and a mismatched n_delta_groups would misalign delta files with
         # their compaction groups), so the persisted values always win.
         meta_path = os.path.join(root, "table_meta.json")
@@ -274,10 +270,7 @@ class SnapshotTable:
 
     def _log(self) -> AppendLog:
         if getattr(self, "_ledger_log", None) is None:
-            self._ledger_log = AppendLog(
-                os.path.join(self.root, "ledger.jsonl"),
-                legacy_json_path=os.path.join(self.root, "ledger.json"),
-            )
+            self._ledger_log = AppendLog(os.path.join(self.root, "ledger.jsonl"))
             entries = self._ledger_log.entries()
             self._committed = {e["epoch_id"]: e for e in entries if "epoch_id" in e}
             self._hw = max((e.get("end_seq", -1) for e in entries), default=-1)
@@ -410,9 +403,9 @@ class SnapshotTable:
         (key, seq) — one payload shuffle, the price of the weaker
         contract — so the seq equi-join cannot emit duplicate rows.
 
-        CoW snapshots (base files only) are returned as-is; when delta
-        files are present (merge-on-read), the LWW collapse happens here —
-        version order (warc_ts, seq) is total because seq is unique, so
+        Snapshots of base files only (fully compacted, or backfilled) are
+        returned as-is; when delta files are present, the LWW collapse
+        happens here — version order (warc_ts, seq) is total because seq is unique, so
         read-time merge is exactly the sink-time merge deferred.
 
         With ``snapshot_id`` this is a time-travel read of that committed
@@ -439,10 +432,9 @@ class SnapshotTable:
 
     def delta_depth(self) -> dict[int, int]:
         """compaction group → number of delta LAYERS (distinct staging
-        snapshots) stacked on it; -1 = legacy spanning deltas. Layers,
-        not files: one epoch may emit many files but adds exactly one
-        read-amplification layer, which is what compaction thresholds
-        should count."""
+        snapshots) stacked on it. Layers, not files: one epoch may emit
+        many files but adds exactly one read-amplification layer, which
+        is what compaction thresholds should count."""
         snap = self.current_snapshot()
         if snap is None:
             return {}
@@ -487,7 +479,7 @@ class SnapshotTable:
             f
             for f in snap.files
             if (f.kind == "base" and f.bucket == b)
-            or (f.kind == "delta" and f.group in (g, -1))
+            or (f.kind == "delta" and f.group == g)
         ]
         if not files:
             return None, 0, len(snap.files)
@@ -583,9 +575,8 @@ class SnapshotTable:
         snapshot_id: str,
         schema_version: int,
         expected_cols: Sequence[str],
-        kind: str = "base",
     ) -> list[DataFile]:
-        """Write data files for a snapshot WITHOUT committing them.
+        """Write base data files for a snapshot WITHOUT committing them.
 
         Files land in data/<snapshot_id>/; until the ledger references the
         manifest they are invisible — a crash here is harmless (orphans
@@ -600,50 +591,7 @@ class SnapshotTable:
             .mode("overwrite")
             .parquet(out_dir)
         )
-        return self._scan_written(out_dir, snapshot_id, schema_version, kind)
-
-    def stage_spanning(
-        self,
-        new_rows: DataFrame,
-        snapshot_id: str,
-        schema_version: int,
-        expected_cols: Sequence[str],
-    ) -> list[DataFile]:
-        """Write UNPARTITIONED delta files (bucket = -1, 'spanning').
-
-        The Hudi-log-file shape: a delta batch is written straight out of
-        the producing stage with NO shuffle — payload bytes stream from
-        scan to file. Kept for compatibility; prefer
-        :meth:`stage_delta_grouped`, which keeps the shuffle-free write
-        but bounds compaction to one group instead of the whole table.
-        """
-        out_dir = os.path.join(self.root, "data", snapshot_id)
-        new_rows.select(*expected_cols).write.mode("overwrite").parquet(out_dir)
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
-        paths = [
-            os.path.join(out_dir, fn)
-            for fn in sorted(os.listdir(out_dir))
-            if fn.endswith(".parquet")
-        ]
-
-        def _one(full: str) -> DataFile:
-            md = pq.read_metadata(full)
-            ts_min, ts_max = _footer_ts_bounds(md)
-            return DataFile(
-                path=os.path.relpath(full, self.root),
-                bucket=-1,
-                schema_version=schema_version,
-                rows=md.num_rows,
-                bytes=os.path.getsize(full),
-                kind="delta",
-                ts_min=ts_min,
-                ts_max=ts_max,
-            )
-
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            return [f for f in ex.map(_one, paths) if f.rows > 0]
+        return self._scan_written(out_dir, schema_version, _BUCKET_DIR)
 
     def stage_delta_grouped(
         self,
@@ -654,13 +602,12 @@ class SnapshotTable:
     ) -> list[DataFile]:
         """Write delta files partitioned MAP-SIDE into compaction groups.
 
-        Same shuffle-free property as spanning deltas — the group id is a
-        pure expression of the key hash computed in the producing stage,
-        and ``partitionBy`` fans rows into group subdirectories with no
-        repartition, so payload bytes stream from scan straight to files.
-        Unlike spanning deltas, compaction then rewrites ONE group
-        (≈ table/n_delta_groups) at a time instead of the whole table —
-        the per-epoch maintenance job stays bounded no matter how big the
+        The write is shuffle-free — the group id is a pure expression of
+        the key hash computed in the producing stage, and ``partitionBy``
+        fans rows into group subdirectories with no repartition, so
+        payload bytes stream from scan straight to files. Compaction then
+        rewrites ONE group (≈ table/n_delta_groups) at a time — the
+        per-epoch maintenance job stays bounded no matter how big the
         table grows. Trade-off: each write task may emit up to
         n_delta_groups files, so keep n_delta_groups modest (8-16).
         """
@@ -673,9 +620,7 @@ class SnapshotTable:
             .mode("overwrite")
             .parquet(out_dir)
         )
-        return self._scan_written(
-            out_dir, snapshot_id, schema_version, kind="delta", dir_prefix=_GROUP_DIR
-        )
+        return self._scan_written(out_dir, schema_version, _GROUP_DIR)
 
     def commit(
         self,
@@ -709,29 +654,11 @@ class SnapshotTable:
         self._append_ledger(entry)
         return snapshot_id
 
-    def write_snapshot(
-        self,
-        new_rows: DataFrame | None,
-        carried: list[DataFile],
-        schema_version: int,
-        epoch_entry: dict,
-        expected_cols: Sequence[str],
-    ) -> str:
-        """Convenience: stage + commit in one call."""
-        snapshot_id = self.new_snapshot_id()
-        new_files: list[DataFile] = []
-        if new_rows is not None:
-            new_files = self.stage(new_rows, snapshot_id, schema_version, expected_cols)
-        return self.commit(snapshot_id, new_files, carried, schema_version, epoch_entry)
-
     def _scan_written(
-        self,
-        out_dir: str,
-        snapshot_id: str,
-        schema_version: int,
-        kind: str = "base",
-        dir_prefix: str = _BUCKET_DIR,
+        self, out_dir: str, schema_version: int, dir_prefix: str
     ) -> list[DataFile]:
+        """DataFiles of a staged directory: base files under bucket
+        partitions, delta files under compaction-group partitions."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
@@ -756,7 +683,7 @@ class SnapshotTable:
                 schema_version=schema_version,
                 rows=md.num_rows,
                 bytes=os.path.getsize(full),
-                kind=kind,
+                kind="base" if dir_prefix == _BUCKET_DIR else "delta",
                 group=val if dir_prefix == _GROUP_DIR else -1,
                 ts_min=ts_min,
                 ts_max=ts_max,
@@ -786,8 +713,7 @@ class SnapshotTable:
         group`` plus the delta files written into that group, so all rows
         of any key in the group are covered — the LWW collapse is exact
         and the job reads/writes ≈ table/n_delta_groups, never the whole
-        table (unless legacy spanning deltas are present, which force a
-        full rewrite). The collapse itself is payload-light: winner seqs
+        table. The collapse itself is payload-light: winner seqs
         from a pruned projection, payload fetched by equi-join.
 
         Tombstone rows are RETAINED in the compacted base by default: a
@@ -813,19 +739,14 @@ class SnapshotTable:
         todo = set(depth) if groups is None else {g for g in groups if g in depth}
         if not todo:
             return None
-        if -1 in depth:
-            # legacy spanning deltas hold rows of every group: a partial
-            # compaction would duplicate their keys — force whole-table
-            touched, untouched = list(snap.files), []
-            todo = set(depth)
-        else:
-            def _is_touched(f: DataFile) -> bool:
-                if f.kind == "delta":
-                    return f.group in todo
-                return group_of_bucket(f.bucket, self.n_delta_groups) in todo
 
-            touched = [f for f in snap.files if _is_touched(f)]
-            untouched = [f for f in snap.files if not _is_touched(f)]
+        def _is_touched(f: DataFile) -> bool:
+            if f.kind == "delta":
+                return f.group in todo
+            return group_of_bucket(f.bucket, self.n_delta_groups) in todo
+
+        touched = [f for f in snap.files if _is_touched(f)]
+        untouched = [f for f in snap.files if not _is_touched(f)]
         df = self._read_files(touched, snap.schema_version)
         collapsed = self._collapse_payload_light(df)
         tombstone_cutoff: int | None = None
@@ -846,9 +767,7 @@ class SnapshotTable:
         )
         data_cols = [c for c in collapsed.columns if c != BUCKET_COL]
         snapshot_id = self.new_snapshot_id()
-        new_files = self.stage(
-            collapsed, snapshot_id, snap.schema_version, data_cols, kind="base"
-        )
+        new_files = self.stage(collapsed, snapshot_id, snap.schema_version, data_cols)
         # the cutoff is RECORDED in the ledger so change-feed reads can
         # detect a window-crossing expiry and fall back to a full diff
         # (the Delta CDF ↔ retention coupling — operators/changes.py)
@@ -857,9 +776,6 @@ class SnapshotTable:
             entry["tombstone_cutoff"] = tombstone_cutoff
         self.commit(snapshot_id, new_files, untouched, snap.schema_version, entry)
         return snapshot_id
-
-    #: former name (pre-grouped-delta API); argument is now a GROUP set
-    compact_buckets = compact_groups
 
     # ------------------------------------------------------------------
     # Snapshot management (reference backup/restore/retention analogs)

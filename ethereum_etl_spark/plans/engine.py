@@ -9,12 +9,12 @@ survives as the epoch loop:
 
     for each epoch (lo, hi] above the ledger high-watermark:
         slice   = WAL WHERE seq > lo AND seq <= hi      (file-pruned scan)
-        winners = LWW dedup per url                     (op rides along)
+        winners = LWW winner seq per url                (op rides along)
         text    = vectorized html→text UDF              (winners ONLY —
                                                          UDF cost ∝ keys,
                                                          not ∝ events)
-        merged  = MERGE resolve vs affected buckets     (copy-on-write)
-        stage data files → write lineage → ATOMIC ledger append
+        stage merge-on-read delta files (LWW collapse deferred to
+        read/compaction) → write lineage → ATOMIC ledger append
 
 Exactly-once: the ledger append is the single commit point. An epoch whose
 epoch_id is already in the ledger is skipped verbatim on resume; a crash
@@ -25,6 +25,10 @@ property from PK upserts — src/repositories/sqlite/base.py:159-171).
 Skew: when an epoch's key histogram is degenerate (hot url prefixes), the
 LWW stage switches to the salted two-phase plan (operators/lww.py), chosen
 per-epoch by a cheap sampled heaviness probe or forced via config.
+
+The same loop drives the multi-table fan-out (plans/multi.py): that
+subclass supplies only its commit log (a group ledger over pages and
+host_stats) and stages host_stats inside its commit step.
 """
 
 from __future__ import annotations
@@ -36,19 +40,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ethereum_etl_spark.functions.extract import extract_text_udf
-from ethereum_etl_spark.operators.lww import lww_agg, lww_salted, lww_winner_seqs
-from ethereum_etl_spark.operators.merge import merge_union_lww
+from ethereum_etl_spark.operators.lww import lww_winner_seqs
 from ethereum_etl_spark.operators.snapshot_table import (
     BUCKET_COL,
     TOMBSTONE_COL,
     SnapshotTable,
-    bucket_expr,
 )
 from ethereum_etl_spark.schemas import (
     PAGES_SCHEMA_V1,
     SchemaRegistry,
     conform_to_schema,
 )
+
+#: LWW plans a config may ask for; 'auto' resolves per epoch to one of
+#: the other two, and the ledger records the plan that ran
+LWW_METHODS = ("auto", "agg", "salted")
+#: share of an epoch's events the 'auto' skew probe samples
+SKEW_SAMPLE_FRAC = 0.05
+#: sticky skew decision: the key distribution of a WAL drifts slowly, so
+#: 'auto' probes the first epoch and re-probes only every this many epochs
+SKEW_REPROBE_EVERY = 8
+#: force the payload-fetch broadcast while the winner-seq list (~8 B/key)
+#: has at most this many rows; past it a shuffle join on seq moves the
+#: payload exactly once
+BROADCAST_MERGE_MAX_ROWS = 2_000_000
+#: at most this many compaction groups (deepest first) collapse after one
+#: epoch — keeps per-epoch maintenance latency bounded; remaining deep
+#: groups drain on later epochs
+COMPACT_GROUPS_PER_EPOCH = 2
 
 
 class AuditError(RuntimeError):
@@ -68,70 +87,28 @@ class InjectedCrash(RuntimeError):
     """Raised by test-configured crash points (fault injection)."""
 
 
-_TIMING = os.environ.get("ETL_SPARK_TIMING", "") != ""
-
-
-class _PhaseTimer:
-    """Opt-in per-phase wall clock (ETL_SPARK_TIMING=1) for plan tuning."""
-
-    def __init__(self, epoch_id: int):
-        import time as _time
-
-        self._time = _time
-        self.epoch_id = epoch_id
-        self.t0 = _time.time()
-
-    def mark(self, label: str) -> None:
-        if _TIMING:
-            now = self._time.time()
-            print(f"[epoch {self.epoch_id}] {label}: {now - self.t0:.2f}s", flush=True)
-            self.t0 = now
-
-
 @dataclass
 class EngineConfig:
     epoch_size: int = 50_000  # events per epoch (maxOffsetsPerTrigger analog)
     n_buckets: int = 32
-    #: "cow" rewrites touched buckets per epoch (read-optimized);
-    #: "mor" appends delta files and collapses at read (write-optimized —
-    #: the 10^10-events/day shape: apply cost ∝ batch, not ∝ table).
-    table_mode: str = "mor"
-    #: mor deltas are fanned map-side into this many compaction groups,
+    #: deltas are fanned map-side into this many compaction groups,
     #: so one compaction job rewrites ≈ table/n_delta_groups, not the
     #: whole table (persisted per-table; the table's value wins)
     n_delta_groups: int = 8
-    #: in mor mode, compact a group once this many delta layers stack on it
+    #: compact a group once this many delta layers stack on it (0 = never)
     compact_max_deltas: int = 8
-    #: cap compaction work per epoch: at most this many groups collapse
-    #: after one epoch (deepest first) — keeps per-epoch maintenance
-    #: latency bounded; remaining deep groups drain on later epochs
-    compact_groups_per_epoch: int = 2
     #: replay window for tombstone expiry during compaction: a tombstone
     #: whose winning seq is ≤ high_watermark − this many seqs can no
     #: longer lose to ANY late event the stream might redeliver, so
     #: compaction drops it (deleted keys stop accumulating forever).
     #: None = retain tombstones indefinitely (the conservative default).
     tombstone_retention_seqs: int | None = None
-    lww_method: str = "auto"  # auto | agg | salted | window
+    lww_method: str = "auto"  # one of LWW_METHODS
     n_salt: int = 16
     skew_threshold: float = 0.2  # key share above which 'auto' salts
-    skew_sample_frac: float = 0.05
     skew_min_events: int = 10_000  # don't bother probing tiny epochs
-    skew_reprobe_every: int = 8  # epochs between fresh skew probes
-    #: cache the payload-free (seq,url,warc_ts,op) projection across the
-    #: 2-3 jobs that read it. False (default) re-runs the pruned parquet
-    #: scan per job: an interleaved pinned A/B at 6M events measured the
-    #: re-scan CHEAPER than the cache round-trip at both 1 and 4 cores
-    #: (n1 111.6s vs 122.1s, n4 29.8s vs 39.7s) — materializing ~100
-    #: B/event into storage memory costs more memory bandwidth than
-    #: decoding 4 narrow snappy columns again, and memory bandwidth is
-    #: the apply pipeline's binding resource. Set True only when the WAL
-    #: scan itself is expensive (e.g. remote object storage, where a
-    #: re-scan pays network instead of local decode).
-    persist_light: bool = False
-    broadcast_merge_max_rows: int = 2_000_000  # winners = (key, version) only
     #: write-audit-publish gates, evaluated over the STAGED files (what
-    #: would be published, after extract/merge) between stage and commit.
+    #: would be published, after extract) between stage and commit.
     #: Declarative dicts so the CLI can load them from JSON:
     #:   {"check": "max_rows"|"min_rows", "limit": n}
     #:   {"check": "max_null_frac", "column": c, "limit": f}   (live rows)
@@ -143,6 +120,12 @@ class EngineConfig:
     #: over just the audited columns.
     audits: list = field(default_factory=list)
     crash_points: set = field(default_factory=set)  # {"after_stage", "after_lineage"}
+
+    def __post_init__(self):
+        if self.lww_method not in LWW_METHODS:
+            raise ValueError(
+                f"lww_method must be one of {LWW_METHODS}, got {self.lww_method!r}"
+            )
 
 
 @dataclass
@@ -179,12 +162,44 @@ class CDCEngine:
         )
         self.lineage_root = os.path.join(table_root, "lineage")
         os.makedirs(self.lineage_root, exist_ok=True)
-        #: sticky skew decision: the key distribution of a WAL drifts
-        #: slowly, so 'auto' probes the first epoch and re-probes only
-        #: every `skew_reprobe_every` epochs instead of paying a probe
-        #: job per epoch.
-        self._skew_memo: bool | None = None
+        self._skew_memo: bool | None = None  # see SKEW_REPROBE_EVERY
         self._epochs_since_probe = 0
+
+    # -- commit log: the table's own ledger (MultiTableEngine overrides
+    #    these four with its group ledger) ----------------------------
+
+    def high_watermark(self) -> int:
+        """Highest WAL seq applied (exclusive resume point); -1 if empty."""
+        return self.table.high_watermark()
+
+    def _committed(self, epoch_id: int) -> EpochResult | None:
+        """The skip result of an already-committed epoch, else None."""
+        e = self.table.committed_epochs().get(epoch_id)
+        if e is None:
+            return None
+        return EpochResult(
+            epoch_id, e["start_seq"], e["end_seq"], 0, 0, e["snapshot_id"], skipped=True
+        )
+
+    def _prepare_commit(self, slice_df, snapshot_id: str, new_files: list, version: int):
+        """Stage, still invisible, whatever the commit publishes besides
+        the pages files; runs before the ``after_stage`` crash point and
+        returns what ``_commit`` needs. The single table has nothing to
+        add: its manifest is written with its ledger line."""
+        return None
+
+    def _commit(
+        self, entry: dict, snapshot_id: str, new_files: list, version: int, prepared
+    ) -> EpochResult:
+        """Publish the epoch: manifest + atomic ledger append."""
+        cur = self.table.current_snapshot()
+        self.table.commit(
+            snapshot_id, new_files, list(cur.files) if cur else [], version, entry
+        )
+        return EpochResult(
+            entry["epoch_id"], entry["start_seq"], entry["end_seq"],
+            entry["n_events"], entry.get("n_keys", 0), snapshot_id,
+        )
 
     # ------------------------------------------------------------------
 
@@ -249,7 +264,7 @@ class CDCEngine:
         ledger high-watermark. epoch_id = first seq in the epoch, so a
         resumed run re-plans IDENTICAL epochs (determinism under crash)
         and a later, longer WAL can never collide with a committed id."""
-        hw = self.table.high_watermark()
+        hw = self.high_watermark()
         top = self.wal_max_seq() if up_to_seq is None else up_to_seq
         size = self.config.epoch_size
         out = []
@@ -266,54 +281,68 @@ class CDCEngine:
         if point in self.config.crash_points:
             raise InjectedCrash(point)
 
+    def _lww_method(self, light: DataFrame, n_events: int) -> str:
+        """The LWW plan for this epoch: the configured one, or for 'auto'
+        'salted' when a sampled probe finds a key above skew_threshold."""
+        cfg = self.config
+        if cfg.lww_method != "auto":
+            return cfg.lww_method
+        if n_events < cfg.skew_min_events:
+            return "agg"
+        if self._skew_memo is None or self._epochs_since_probe >= SKEW_REPROBE_EVERY:
+            top = (
+                light.select("url")
+                .sample(SKEW_SAMPLE_FRAC, seed=7)
+                .groupBy("url")
+                .count()
+                .agg(F.max("count").alias("m"))
+                .collect()[0]["m"]
+            )
+            sample_n = max(int(n_events * SKEW_SAMPLE_FRAC), 1)
+            self._skew_memo = bool(top) and top / sample_n > cfg.skew_threshold
+            self._epochs_since_probe = 0
+        self._epochs_since_probe += 1
+        return "salted" if self._skew_memo else "agg"
+
     def run_epoch(self, epoch_id: int, lo: int, hi: int) -> EpochResult:
-        """One epoch in 2 Spark jobs (MoR; CoW adds a winner-count job),
-        none of which shuffles html bytes:
+        """One epoch in 2 Spark jobs (plus a sampled skew probe when
+        'auto' re-probes), none of which shuffles html bytes:
 
         job 1 (light scan): exact event count + approximate key count
-               over a cached payload-FREE projection (seq/url/warc_ts/
-               op); per-file lineage stats come from cached parquet
-               footers — pure metadata, zero payload IO.
-        job 2 (the write): winner seqs ⋈ WAL slice fetches payloads once,
-               Arrow text-extract on winners only, then MoR grouped delta
-               write (shuffle-free) or CoW merge vs touched buckets.
+               over a payload-FREE projection (seq/url/warc_ts/op);
+               per-file lineage stats come from cached parquet footers —
+               pure metadata, zero payload IO.
+        job 2 (the write): winning seqs from ONE partial-agg shuffle of
+               128-bit key fingerprints (operators/lww.py
+               lww_winner_seqs), a broadcast seq equi-join against the
+               WAL slice fetches payloads once, Arrow text-extract on
+               winners only, then a grouped delta write fanned map-side
+               into compaction groups (shuffle-free).
 
         The WAL's html column is read exactly once (the write job's scan)
-        and never crosses a shuffle: dedup/merge decisions travel as
-        (url, warc_ts, seq) tuples, and in CoW mode the stage write's
-        bucket repartition moves only the winning rows plus
-        touched-bucket rows — the CoW minimum.
+        and never crosses a shuffle. LWW collapse against earlier epochs
+        is deferred to read/compaction, so the epoch writes ~n_keys rows
+        no matter how big the table is.
         """
         cfg = self.config
-        committed = self.table.committed_epochs()
-        if epoch_id in committed:  # exactly-once resume: skip verbatim
-            e = committed[epoch_id]
-            return EpochResult(
-                epoch_id, e["start_seq"], e["end_seq"], 0, 0, e["snapshot_id"], skipped=True
-            )
+        done = self._committed(epoch_id)
+        if done is not None:  # exactly-once resume: skip verbatim
+            return done
 
-        timer = _PhaseTimer(epoch_id)
-        wal = self._wal()
-        slice_df = wal.filter((F.col("seq") > lo) & (F.col("seq") <= hi))
-
-        # -- job 1: payload-FREE projection (seq/url/warc_ts/op — html is
-        #    read exactly once per epoch, in the write job): one global
-        #    agg gives the exact event count plus the approximate key
-        #    count that feeds the broadcast decision. Per-file lineage
-        #    stats (offsets, rows, payload bytes) come from the cached
-        #    parquet FOOTERS — metadata, not a payload scan; previously
-        #    length(html) here forced a second full-payload decompress
-        #    per epoch.
+        slice_df = self._wal().filter((F.col("seq") > lo) & (F.col("seq") <= hi))
+        # -- job 1: payload-FREE projection (html is read exactly once per
+        #    epoch, in the write job): one global agg gives the exact
+        #    event count plus the approximate key count that feeds the
+        #    broadcast decision. The projection is re-scanned by each job,
+        #    not cached: a pinned A/B measured re-decoding 4 narrow columns
+        #    cheaper than caching ~100 B/event (SURVEY.md, uncached light
+        #    projection).
         light = slice_df.select("seq", "url", "warc_ts", "op")
-        if cfg.persist_light:
-            light = light.persist()
         total = light.agg(
             F.count("*").alias("row_count"),
             F.approx_count_distinct("url").alias("n_keys_est"),
         ).collect()[0]
-        timer.mark("lineage scan")
         n_events = int(total["row_count"])
-        n_keys_est = int(total["n_keys_est"])
         # a WAL file belongs to the epoch that covers its first seq
         # (boundary files are attributed whole, so lineage rows+bytes
         # tile the WAL exactly across epochs; Iceberg manifests carry
@@ -324,192 +353,65 @@ class CDCEngine:
             if f["seq_min"] is not None and lo < f["seq_min"] <= hi
         ]
         version = self.registry.version_at(hi)
+        snapshot_id = self.table.new_snapshot_id()
+        entry = {"epoch_id": epoch_id, "start_seq": lo, "end_seq": hi, "n_events": n_events}
         if n_events == 0:
-            light.unpersist()
-            snapshot_id = self.table.write_snapshot(
-                None, self.table.current_snapshot().files if self.table.current_snapshot() else [],
-                version,
-                {"epoch_id": epoch_id, "start_seq": lo, "end_seq": hi, "n_events": 0},
-                [],
-            )
-            return EpochResult(epoch_id, lo, hi, 0, 0, snapshot_id)
+            prepared = self._prepare_commit(slice_df, snapshot_id, [], version)
+            return self._commit(entry, snapshot_id, [], version, prepared)
 
-        winner_persisted = False
-        try:
-            # -- choose LWW plan (skew probe over the cached projection) --
-            method = cfg.lww_method
-            if method == "auto":
-                if n_events < cfg.skew_min_events:
-                    method = "agg"
-                else:
-                    if (
-                        self._skew_memo is None
-                        or self._epochs_since_probe >= cfg.skew_reprobe_every
-                    ):
-                        top = (
-                            light.select("url")
-                            .sample(cfg.skew_sample_frac, seed=7)
-                            .groupBy("url")
-                            .count()
-                            .agg(F.max("count").alias("m"))
-                            .collect()[0]["m"]
-                        )
-                        sample_n = max(int(n_events * cfg.skew_sample_frac), 1)
-                        self._skew_memo = bool(top) and top / sample_n > cfg.skew_threshold
-                        self._epochs_since_probe = 0
-                    self._epochs_since_probe += 1
-                    method = "salted" if self._skew_memo else "agg"
-            timer.mark("skew probe")
+        # -- job 2: winner seqs → payload fetch (seq is unique → exact
+        #    equi-join) → extract → grouped delta write -------------------
+        method = self._lww_method(light, n_events)
+        seqs = lww_winner_seqs(light, method=method, n_salt=cfg.n_salt)
+        if int(total["n_keys_est"]) <= BROADCAST_MERGE_MAX_ROWS:
+            seqs = F.broadcast(seqs)
+        winners = slice_df.join(seqs, on="seq", how="inner").withColumn(
+            "text",
+            F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
+                extract_text_udf(F.col("html"))
+            ),
+        )
+        # rename-aware ingestion + null-fill tolerance (the reference
+        # .get() posture)
+        physical_cols = [f.name for f in self.registry.schema_at(hi).fields] + [TOMBSTONE_COL]
+        winners = (
+            conform_to_schema(winners, self.registry, version)
+            .withColumn(TOMBSTONE_COL, F.col("op") == "delete")
+            .select(*physical_cols)
+        )
+        new_files = self.table.stage_delta_grouped(
+            winners, snapshot_id, version, physical_cols
+        )
+        # exact key count from the delta file footers
+        entry.update(n_keys=sum(f.rows for f in new_files), lww_method=method)
 
-            # -- winner keys ----------------------------------------------
-            # broadcast_winners=False everywhere: winner sets are ~the
-            # epoch's key count (100k-1M rows) — forcing them into driver
-            # broadcasts degrades the session; AQE broadcasts from runtime
-            # size stats when a side is genuinely small.
-            keyed = light
-            if cfg.table_mode == "mor":
-                # MoR needs ONLY the winning seqs (payload comes back via
-                # the seq equi-join below), so the LWW plan skips the
-                # general operators' winner→event join-back entirely and
-                # shuffles 128-bit key fingerprints instead of url bytes
-                # (operators/lww.py lww_winner_seqs) — one partial-agg
-                # shuffle of ~32 B tuples is the whole dedup. No affected-
-                # bucket set and no exact key count up front either (delta
-                # file footers give n_keys for free after the write).
-                winner_keys = lww_winner_seqs(
-                    keyed,
-                    method=method if method in ("salted",) else "agg",
-                    n_salt=cfg.n_salt,
-                )
-                affected = set()
-                n_keys = n_keys_est
-            elif method == "salted":
-                winner_keys = lww_salted(keyed, n_salt=cfg.n_salt, broadcast_winners=False)
-            elif method == "window":
-                from ethereum_etl_spark.operators.lww import lww_window
+        # -- everything staged, lineage written, THEN the atomic commit ---
+        prepared = self._prepare_commit(slice_df, snapshot_id, new_files, version)
+        self._maybe_crash("after_stage")
+        if cfg.audits:
+            failures = self._run_audits(new_files, version, cfg.audits)
+            if failures:
+                raise AuditError(epoch_id, failures)
+        self._write_lineage(epoch_id, lineage, snapshot_id, n_events)
+        self._maybe_crash("after_lineage")
+        result = self._commit(entry, snapshot_id, new_files, version, prepared)
 
-                winner_keys = lww_window(keyed)
-            else:
-                winner_keys = lww_agg(keyed, broadcast_winners=False)
-            if cfg.table_mode != "mor":
-                winner_keys = winner_keys.withColumn(
-                    BUCKET_COL, bucket_expr("url", self.table.n_buckets)
-                ).persist()
-                winner_persisted = True
-                bucket_counts = (
-                    winner_keys.groupBy(BUCKET_COL).agg(F.count("*").alias("n")).collect()
-                )
-                timer.mark("winner keys")
-                affected = {r[BUCKET_COL] for r in bucket_counts}
-                n_keys = sum(r["n"] for r in bucket_counts)
-
-            # -- the write job: payload fetch (seq is unique → equi-join),
-            #    extract, merge, stage write ------------------------------
-            # payload fetch: the seq list is ~8 bytes/key — force the
-            # broadcast while it fits comfortably so the WAL slice (with
-            # html) never shuffles; past that, a shuffle join on seq moves
-            # the payload exactly once (the unavoidable cost at that size)
-            seqs = winner_keys.select("seq")
-            if n_keys <= cfg.broadcast_merge_max_rows:
-                seqs = F.broadcast(seqs)
-            winners = slice_df.join(seqs, on="seq", how="inner")
-            schema = self.registry.schema_at(hi)
-            data_cols = [f.name for f in schema.fields]
-            winners = winners.withColumn(
-                "text",
-                F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
-                    extract_text_udf(F.col("html"))
-                ),
-            )
-            # rename-aware ingestion + null-fill tolerance (the reference
-            # .get() posture) — shared helper, same for multi-table
-            winners = conform_to_schema(winners, self.registry, version)
-            physical_cols = data_cols + [TOMBSTONE_COL]
-            winners = winners.withColumn(
-                TOMBSTONE_COL, F.col("op") == "delete"
-            ).select(*physical_cols)
-
-            if cfg.table_mode == "mor":
-                # -- merge-on-read: append winners as GROUPED delta files
-                #    (Hudi-log-file shape, fanned map-side into compaction
-                #    groups). The whole epoch write is shuffle-free: scan →
-                #    broadcast-join → Arrow UDF → files. LWW collapse is
-                #    deferred to read/compaction, so the epoch writes
-                #    ~n_keys rows no matter how big the table is; each
-                #    compaction then rewrites one group, not the table. ---
-                cur = self.table.current_snapshot()
-                untouched = list(cur.files) if cur else []
-            else:
-                # -- copy-on-write: merge vs affected buckets -------------
-                target_df, untouched, touched_rows = self.table.read_buckets(affected, version)
-                if target_df is not None:
-                    target_df = target_df.drop(BUCKET_COL)
-                merged = merge_union_lww(
-                    target_df,
-                    winners,
-                    key_col="url",
-                    version_cols=("warc_ts", "seq"),
-                    data_cols=physical_cols,
-                    broadcast_winners=False,  # AQE decides from runtime stats
-                ).withColumn(BUCKET_COL, bucket_expr("url", self.table.n_buckets))
-                file_kind = "base"
-
-            # -- stage files, write lineage, THEN atomically commit -------
-            snapshot_id = self.table.new_snapshot_id()
-            if cfg.table_mode == "mor":
-                new_files = self.table.stage_delta_grouped(
-                    winners, snapshot_id, version, physical_cols
-                )
-                n_keys = sum(f.rows for f in new_files)  # exact, from footers
-            else:
-                new_files = self.table.stage(
-                    merged, snapshot_id, version, physical_cols, kind=file_kind
-                )
-            timer.mark("merge+stage write")
-            self._maybe_crash("after_stage")
-            if cfg.audits:
-                failures = self._run_audits(new_files, version, cfg.audits)
-                timer.mark("audit")
-                if failures:
-                    raise AuditError(epoch_id, failures)
-            self._write_lineage(epoch_id, lineage, snapshot_id, n_events)
-            timer.mark("lineage write")
-            self._maybe_crash("after_lineage")
-            self.table.commit(
-                snapshot_id,
-                new_files,
-                untouched,
-                version,
-                {
-                    "epoch_id": epoch_id,
-                    "start_seq": lo,
-                    "end_seq": hi,
-                    "n_events": n_events,
-                    "n_keys": n_keys,
-                    "lww_method": method,
-                },
-            )
-        finally:
-            light.unpersist()
-            if winner_persisted:
-                winner_keys.unpersist()
         # -- amortized compaction: collapse the deepest delta groups, at
-        #    most compact_groups_per_epoch per epoch, so maintenance
+        #    most COMPACT_GROUPS_PER_EPOCH per epoch, so maintenance
         #    latency per epoch is bounded by ≈ table/n_delta_groups each
         #    (its own atomic snapshot; crash-safe, idempotent) -----------
-        if cfg.table_mode == "mor" and cfg.compact_max_deltas:
+        if cfg.compact_max_deltas:
             depth = self.table.delta_depth()
             deep = sorted(
                 (g for g, d in depth.items() if d >= cfg.compact_max_deltas),
                 key=lambda g: -depth[g],
-            )[: max(cfg.compact_groups_per_epoch, 1)]
+            )[:COMPACT_GROUPS_PER_EPOCH]
             if deep:
                 self.table.compact_groups(
                     set(deep),
                     tombstone_retention_seqs=cfg.tombstone_retention_seqs,
                 )
-                timer.mark(f"compaction ({len(deep)} groups)")
-        return EpochResult(epoch_id, lo, hi, n_events, n_keys, snapshot_id)
+        return result
 
     def _run_audits(self, new_files: list, version: int, audits: list) -> list[dict]:
         """Evaluate WAP constraints over the staged (not yet published)
@@ -534,8 +436,6 @@ class CDCEngine:
                 raise ValueError(f"unknown audit check: {check!r}")
         if not col_checks or n_rows == 0:
             return failures
-        from ethereum_etl_spark.operators.snapshot_table import TOMBSTONE_COL
-
         live = ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
         aggs, metas = [], []
         for i, a in enumerate(col_checks):
@@ -636,7 +536,7 @@ class CDCEngine:
         MoR delta overlays are compacted first (bounded per group, all
         groups) so the rewrite reads one layer. The rewrite itself is
         the honest full-table cost of a backfill — one bucket-
-        partitioned CoW pass, shuffle bounded by the bucket layout.
+        partitioned rewrite, shuffle bounded by the bucket layout.
 
         Returns the new snapshot id, or None on an empty table.
         """

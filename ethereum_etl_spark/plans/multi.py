@@ -19,10 +19,21 @@ from a single GROUP ledger:
    between (2) and (3) self-heals and the group entry stays the single
    source of truth.
 
+The epoch body is the single-table engine's (plans/engine.py
+``CDCEngine.run_epoch``): planning, the exactly-once skip, the light
+count job, the pages write, crash points, lineage and compaction are
+inherited. This subclass supplies only what differs: the commit log
+(group ledger, its high watermark and committed epochs, ``reconcile``),
+host_stats staging inside its commit step, and its read, change-feed and
+vacuum helpers. Pages compaction snapshots live only in the pages
+table's own ledger (a maintenance commit rewrites files, not logical
+state); reconciliation tolerates member ledgers carrying such extra
+entries.
+
 Tables driven here:
 
-- ``pages``    — the LWW-upsert page store (same semantics as
-                 plans/engine.py, merge-on-read grouped deltas).
+- ``pages``    — the LWW-upsert page store (the single-table engine's
+                 merge-on-read grouped deltas, 16 buckets, ``agg`` LWW).
                  Schema evolution is registry-driven per epoch, exactly
                  like the single-table engine: pass a ``pages_registry``
                  with change records and each epoch resolves
@@ -53,8 +64,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ethereum_etl_spark.functions.extract import extract_text_udf
-from ethereum_etl_spark.operators.lww import lww_winner_seqs
 from ethereum_etl_spark.operators.snapshot_table import (
     BUCKET_COL,
     TOMBSTONE_COL,
@@ -63,12 +72,9 @@ from ethereum_etl_spark.operators.snapshot_table import (
     SnapshotTable,
     bucket_expr,
 )
-from ethereum_etl_spark.schemas import (
-    PAGES_SCHEMA_V1,
-    SchemaRegistry,
-    conform_to_schema,
-    schema_for_version,
-)
+from ethereum_etl_spark.plans.engine import CDCEngine, EngineConfig
+from ethereum_etl_spark.plans.engine import InjectedCrash  # noqa: F401 (re-exported)
+from ethereum_etl_spark.schemas import SchemaRegistry
 
 #: per-host aggregate dimension (derived table #2)
 HOST_STATS_SCHEMA = T.StructType(
@@ -92,10 +98,6 @@ _HOST_COLS = [f.name for f in HOST_STATS_SCHEMA.fields]
 _HOST_RE = r"^https?://([^/]+)"
 
 
-class InjectedCrash(RuntimeError):
-    pass
-
-
 @dataclass
 class MultiEpochResult:
     epoch_id: int
@@ -106,48 +108,45 @@ class MultiEpochResult:
     skipped: bool = False
 
 
-class MultiTableEngine:
+class MultiTableEngine(CDCEngine):
+    # The loop is CDCEngine's; binding it as this class's own attributes
+    # lets per-class instrumentation (perfbench/spans.py wraps methods by
+    # class attribute) see one multi.run_epoch span per epoch rather
+    # than an engine.run_epoch span nested inside it.
+    plan_epochs = CDCEngine.plan_epochs
+    run_epoch = CDCEngine.run_epoch
+    run = CDCEngine.run
+
     def __init__(
         self,
         spark: SparkSession,
         wal_path: str,
         root: str,
         epoch_size: int = 50_000,
-        n_buckets: int = 16,
-        n_delta_groups: int = 8,
-        compact_max_deltas: int = 8,
-        compact_groups_per_epoch: int = 2,
         pages_registry: SchemaRegistry | None = None,
-        host_n_buckets: int = 16,
         crash_points: set | None = None,
-        tombstone_retention_seqs: int | None = None,
     ):
-        self.spark = spark
-        self.wal_path = wal_path
         self.root = root
-        self.epoch_size = epoch_size
-        self.compact_max_deltas = compact_max_deltas
-        self.compact_groups_per_epoch = compact_groups_per_epoch
-        # mirror EngineConfig: retention-on is the stated posture for the
-        # 10^10-churn target; None = retain tombstones forever
-        self.tombstone_retention_seqs = tombstone_retention_seqs
-        self.crash_points = crash_points or set()
         os.makedirs(root, exist_ok=True)
-        self.pages_registry = pages_registry or SchemaRegistry(base_schema=PAGES_SCHEMA_V1)
-        self.pages = SnapshotTable(
+        super().__init__(
             spark,
+            wal_path,
             os.path.join(root, "pages"),
-            registry=self.pages_registry,
-            key_col="url",
-            n_buckets=n_buckets,
-            n_delta_groups=n_delta_groups,
+            registry=pages_registry,
+            config=EngineConfig(
+                epoch_size=epoch_size,
+                n_buckets=16,
+                lww_method="agg",
+                crash_points=crash_points or set(),
+            ),
         )
+        self.pages = self.table
         self.hosts = SnapshotTable(
             spark,
             os.path.join(root, "host_stats"),
             registry=SchemaRegistry(base_schema=HOST_STATS_SCHEMA),
             key_col="host",
-            n_buckets=host_n_buckets,
+            n_buckets=16,
         )
         self._tables = {"pages": self.pages, "host_stats": self.hosts}
         self.reconcile()
@@ -156,11 +155,9 @@ class MultiTableEngine:
 
     def _group_log(self) -> AppendLog:
         if getattr(self, "_group_log_obj", None) is None:
-            self._group_log_obj = AppendLog(
-                os.path.join(self.root, "group_ledger.jsonl"),
-                legacy_json_path=os.path.join(self.root, "group_ledger.json"),
-            )
+            self._group_log_obj = AppendLog(os.path.join(self.root, "group_ledger.jsonl"))
             entries = self._group_log_obj.entries()
+            self._group_committed = {e["epoch_id"]: e for e in entries}
             self._group_hw = max((e["end_seq"] for e in entries), default=-1)
         return self._group_log_obj
 
@@ -169,6 +166,7 @@ class MultiTableEngine:
 
     def _append_group(self, entry: dict) -> None:
         self._group_log().append(entry)  # atomic multi-table commit
+        self._group_committed[entry["epoch_id"]] = entry
         self._group_hw = max(self._group_hw, entry["end_seq"])
 
     def reconcile(self) -> int:
@@ -206,86 +204,55 @@ class MultiTableEngine:
         self._group_log()
         return self._group_hw
 
-    # -- epoch loop -----------------------------------------------------
+    # -- the commit step of CDCEngine.run_epoch ---------------------------
 
-    def _wal(self) -> DataFrame:
-        from ethereum_etl_spark.schemas import CHANGE_EVENT_SCHEMA
-
-        return self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.wal_path)
-
-    def plan_epochs(self) -> list[tuple[int, int, int]]:
-        hw = self.high_watermark()
-        row = self._wal().agg(F.max("seq").alias("m")).collect()[0]
-        top = -1 if row["m"] is None else int(row["m"])
-        out, lo = [], hw
-        while lo < top:
-            hi = min(lo + self.epoch_size, top)
-            out.append((lo + 1, lo, hi))
-            lo = hi
-        return out
-
-    def _crash(self, point: str) -> None:
-        if point in self.crash_points:
-            raise InjectedCrash(point)
-
-    def run_epoch(self, epoch_id: int, lo: int, hi: int) -> MultiEpochResult:
-        committed = {e["epoch_id"]: e for e in self.group_entries()}
-        if epoch_id in committed:
-            self.reconcile()
-            e = committed[epoch_id]
-            return MultiEpochResult(
-                epoch_id, e["start_seq"], e["end_seq"], 0, dict(e["tables"]), skipped=True
-            )
-        slice_df = self._wal().filter((F.col("seq") > lo) & (F.col("seq") <= hi))
-        n_events = slice_df.count()
-
-        # -- branch 1: pages (LWW winners → extract → MoR grouped delta),
-        #    schema version resolved per epoch from the registry.
-        #    SAME winner plan as the single-table engine (plans/
-        #    engine.py MoR path): winning seqs from ONE partial-agg
-        #    shuffle of 128-bit key fingerprints over a payload-FREE
-        #    projection, payload fetched once by a broadcast seq
-        #    equi-join — html never crosses a shuffle. (The previous
-        #    lww_agg(slice_df) joined winners back against the
-        #    payload-carrying slice on (url, warc_ts, seq): at test
-        #    scale AQE broadcasts the winner side, but at 1M keys/epoch
-        #    the payload would cross the wire the flagship path proved
-        #    avoidable.)
-        pages_version = self.pages_registry.version_at(hi)
-        pages_schema = schema_for_version(self.pages_registry, pages_version)
-        pages_cols = [f.name for f in pages_schema.fields] + [TOMBSTONE_COL]
-        seqs = lww_winner_seqs(slice_df.select("seq", "url", "warc_ts")).select("seq")
-        if n_events <= 2_000_000:  # winner seqs ≤ events: ~8 B/key
-            seqs = F.broadcast(seqs)
-        winners = slice_df.join(seqs, on="seq", how="inner")
-        winners = winners.withColumn(
-            "text",
-            F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
-                extract_text_udf(F.col("html"))
-            ),
+    def _committed(self, epoch_id: int) -> MultiEpochResult | None:
+        self._group_log()
+        e = self._group_committed.get(epoch_id)
+        if e is None:
+            return None
+        self.reconcile()
+        return MultiEpochResult(
+            epoch_id, e["start_seq"], e["end_seq"], 0, dict(e["tables"]), skipped=True
         )
-        pages_rows = (
-            conform_to_schema(winners, self.pages_registry, pages_version)
-            .withColumn(TOMBSTONE_COL, F.col("op") == "delete")
-            .select(*pages_cols)
-        )
-        pages_sid = self.pages.new_snapshot_id()
-        pages_files = self.pages.stage_delta_grouped(
-            pages_rows, pages_sid, pages_version, pages_cols
-        )
-        pages_cur = self.pages.current_snapshot()
+
+    def _prepare_commit(self, slice_df, snapshot_id: str, new_files: list, version: int) -> str:
+        """Write the pages manifest (invisible until the group ledger
+        references it) and stage host_stats; returns its snapshot id."""
+        cur = self.pages.current_snapshot()
         self.pages._write_manifest(
             Snapshot(
-                snapshot_id=pages_sid,
-                parent_id=pages_cur.snapshot_id if pages_cur else None,
-                schema_version=pages_version,
-                files=(list(pages_cur.files) if pages_cur else []) + pages_files,
-                summary={"new_files": len(pages_files)},
+                snapshot_id=snapshot_id,
+                parent_id=cur.snapshot_id if cur else None,
+                schema_version=version,
+                files=(list(cur.files) if cur else []) + new_files,
+                summary={"new_files": len(new_files)},
             )
         )
+        return self._stage_hosts(slice_df)
 
-        # -- branch 2: host_stats (additive per-host aggregate, TOUCHED-
-        #    bucket copy-on-write merge: cost ∝ batch's host spread) -----
+    def _commit(
+        self, entry: dict, snapshot_id: str, new_files: list, version: int, hosts_sid: str
+    ) -> MultiEpochResult:
+        snapshots = {"pages": snapshot_id, "host_stats": hosts_sid}
+        self._append_group(
+            {
+                **{k: entry[k] for k in ("epoch_id", "start_seq", "end_seq", "n_events")},
+                "tables": snapshots,
+                "schema_versions": {"pages": version, "host_stats": 1},
+                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            }
+        )
+        self._maybe_crash("after_group_commit")
+        self.reconcile()
+        return MultiEpochResult(
+            entry["epoch_id"], entry["start_seq"], entry["end_seq"], entry["n_events"], snapshots
+        )
+
+    def _stage_hosts(self, slice_df: DataFrame) -> str:
+        """host_stats: additive per-host aggregate of the epoch slice,
+        merged by TOUCHED-bucket copy-on-write (cost ∝ batch's host
+        spread); stages files and manifest, returns the snapshot id."""
         host = F.regexp_extract(F.col("url"), _HOST_RE, 1)
         delta = (
             slice_df.groupBy(host.alias("host"))
@@ -334,42 +301,7 @@ class MultiTableEngine:
                 },
             )
         )
-        self._crash("after_stage")
-
-        snapshots = {"pages": pages_sid, "host_stats": hosts_sid}
-        self._append_group(
-            {
-                "epoch_id": epoch_id,
-                "start_seq": lo,
-                "end_seq": hi,
-                "n_events": n_events,
-                "tables": snapshots,
-                "schema_versions": {"pages": pages_version, "host_stats": 1},
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-        )
-        self._crash("after_group_commit")
-        self.reconcile()
-        # amortized pages compaction — same bounded round-robin policy as
-        # the single-table engine. Compaction snapshots live only in the
-        # pages table's own ledger (a maintenance commit rewrites files,
-        # not logical state), which the group-ledger reconciliation
-        # tolerates: member ledgers may carry extra maintenance entries.
-        if self.compact_max_deltas:
-            depth = self.pages.delta_depth()
-            deep = sorted(
-                (g for g, d in depth.items() if d >= self.compact_max_deltas),
-                key=lambda g: -depth[g],
-            )[: max(self.compact_groups_per_epoch, 1)]
-            if deep:
-                self.pages.compact_groups(
-                    set(deep),
-                    tombstone_retention_seqs=self.tombstone_retention_seqs,
-                )
-        return MultiEpochResult(epoch_id, lo, hi, n_events, snapshots)
-
-    def run(self) -> list[MultiEpochResult]:
-        return [self.run_epoch(e, lo, hi) for e, lo, hi in self.plan_epochs()]
+        return hosts_sid
 
     def vacuum_orphans(self, older_than_s: float = 3600.0) -> int:
         """Vacuum every member table with the GROUP ledger's snapshot
@@ -395,12 +327,7 @@ class MultiTableEngine:
     # -- read paths -----------------------------------------------------
 
     def read_pages(self) -> DataFrame | None:
-        df = self.pages.read()
-        if df is None:
-            return None
-        return df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))).drop(
-            BUCKET_COL, TOMBSTONE_COL
-        )
+        return self.read_table()
 
     def read_hosts(self) -> DataFrame | None:
         df = self.hosts.read()
@@ -412,14 +339,10 @@ class MultiTableEngine:
         self, from_snapshot: str | None, to_snapshot: str | None = None
     ) -> DataFrame | None:
         """Incremental change feed over the fan-out ``pages`` member —
-        the same manifest-diff path as the single-table engine (work ∝
-        rows written in the window). Snapshot ids come from the group
-        ledger's per-epoch ``tables["pages"]`` entries."""
-        from ethereum_etl_spark.operators.changes import table_changes
-
-        return table_changes(
-            self.pages, self.pages_registry, from_snapshot, to_snapshot
-        )
+        the single-table engine's manifest-diff path (work ∝ rows written
+        in the window). Snapshot ids come from the group ledger's
+        per-epoch ``tables["pages"]`` entries."""
+        return self.changes(from_snapshot, to_snapshot)
 
     def changes_hosts(
         self,

@@ -28,16 +28,6 @@ BENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CONFIGS: dict[str, dict[str, str]] = {
     "base": {"BENCH_WAL_NAME": "wal_snappy", "BENCH_CODEC": "snappy"},
     "zstd": {"BENCH_WAL_NAME": "wal_zstd", "BENCH_CODEC": "zstd"},
-    "nopersist": {
-        "BENCH_WAL_NAME": "wal_snappy",
-        "BENCH_CODEC": "snappy",
-        "BENCH_PERSIST_LIGHT": "0",
-    },
-    "zstd_nopersist": {
-        "BENCH_WAL_NAME": "wal_zstd",
-        "BENCH_CODEC": "zstd",
-        "BENCH_PERSIST_LIGHT": "0",
-    },
     "bigbatch": {
         "BENCH_WAL_NAME": "wal_snappy",
         "BENCH_CODEC": "snappy",

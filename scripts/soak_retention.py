@@ -52,7 +52,7 @@ def main() -> None:
         eng = CDCEngine(
             spark, wal, table,
             config=EngineConfig(
-                epoch_size=EPOCH, n_buckets=64, table_mode="mor",
+                epoch_size=EPOCH, n_buckets=64,
                 tombstone_retention_seqs=RETENTION,
             ),
         )

@@ -134,6 +134,25 @@ def test_skewed_wal_salted_equals_oracle(spark, tmp_path, tmp_table):
     _assert_state_equals_oracle(eng, _wal_pandas(spark, p))
 
 
+def test_lww_method_is_validated_and_recorded(spark, tmp_path):
+    """The ledger records the LWW plan that ran: a forced plan is written
+    verbatim, and a method the engine has no plan for is rejected up
+    front instead of silently running another one."""
+    for bad in ("window", "salty"):
+        with pytest.raises(ValueError, match="lww_method"):
+            EngineConfig(lww_method=bad)
+    p = str(tmp_path / "wal_m")
+    write_wal(gen_wal(spark, WalConfig(n_events=2_000, n_urls=300)), p, n_files=2)
+    for method in ("agg", "salted"):
+        eng = CDCEngine(
+            spark, p, str(tmp_path / f"t_{method}"),
+            config=EngineConfig(epoch_size=1_000, n_buckets=4, lww_method=method),
+        )
+        eng.run()
+        assert [e["lww_method"] for e in eng.table.read_ledger()] == [method, method]
+        _assert_state_equals_oracle(eng, _wal_pandas(spark, p))
+
+
 def test_deletes_remove_keys(spark, tmp_path, tmp_table):
     cfg = WalConfig(n_events=5_000, n_urls=300, insert_frac=0.4, update_frac=0.3)
     p = str(tmp_path / "wal_del")

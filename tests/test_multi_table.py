@@ -387,3 +387,24 @@ def test_vacuum_group_committed_member_survives_before_reconcile(spark, tmp_path
     assert sid in {e.get("snapshot_id") for e in eng2.pages.read_ledger()}
     assert eng2.read_pages().count() > 0
     assert eng2.run() == []  # exactly-once: nothing left to apply
+
+
+def test_multi_table_empty_epoch_commits_through_group_ledger(spark, tmp_path):
+    """An epoch range that holds no events still commits through the
+    group ledger: both members get a snapshot, the group watermark
+    advances, and neither table's contents change."""
+    wal = str(tmp_path / "wal")
+    write_wal(gen_wal(spark, WalConfig(n_events=2_000, n_urls=300)), wal, n_files=2)
+    eng = MultiTableEngine(spark, wal, str(tmp_path / "multi"), epoch_size=2_000)
+    eng.run()
+    hosts_before = _hosts_pdf(eng)
+    n_pages = eng.read_pages().count()
+
+    r = eng.run_epoch(2_000, 1_999, 2_499)  # past the WAL's last seq
+    assert r.n_events == 0 and not r.skipped
+    assert eng.high_watermark() == 2_499
+    assert eng.group_entries()[-1]["tables"] == r.snapshots
+    assert eng.pages.read_ledger()[-1]["snapshot_id"] == r.snapshots["pages"]
+    assert eng.hosts.read_ledger()[-1]["snapshot_id"] == r.snapshots["host_stats"]
+    assert eng.read_pages().count() == n_pages
+    pd.testing.assert_frame_equal(_hosts_pdf(eng), hosts_before)

@@ -1,7 +1,7 @@
 """Property-based replay equivalence (hypothesis over the knob space).
 
 One property, many configurations: for ANY (op mix, out-of-order rate,
-hot-key skew, epoch size, table mode, LWW plan), consuming the WAL must
+hot-key skew, epoch size, LWW plan), consuming the WAL must
 leave the table byte-equal to the single-threaded pandas oracle. This is
 the north rule's contract quantified over the configuration space rather
 than hand-picked cases.
@@ -25,8 +25,7 @@ KNOBS = st.fixed_dictionaries(
         "hot_frac": st.floats(0.0, 0.5),
         "n_hot_urls": st.integers(1, 3),
         "epoch_size": st.sampled_from([400, 700, 1500, 5000]),
-        "table_mode": st.sampled_from(["mor", "cow"]),
-        "lww_method": st.sampled_from(["agg", "salted", "window", "auto"]),
+        "lww_method": st.sampled_from(["agg", "salted", "auto"]),
     }
 )
 
@@ -60,7 +59,6 @@ def test_replay_equals_oracle_for_any_config(spark, tmp_path_factory, knobs):
         config=EngineConfig(
             epoch_size=knobs["epoch_size"],
             n_buckets=4,
-            table_mode=knobs["table_mode"],
             lww_method=knobs["lww_method"],
             n_salt=4,
             skew_min_events=500,

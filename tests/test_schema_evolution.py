@@ -57,7 +57,7 @@ def test_add_column_mid_stream(spark, tmp_path, tmp_table):
 
     # compaction across schema versions: v1 delta files upgrade to v2
     # during the rewrite and the logical state is unchanged
-    eng.table.compact_buckets()
+    eng.table.compact_groups()
     after = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
     after["html"] = after["html"].map(lambda b: bytes(b) if b is not None else None)
     pd.testing.assert_frame_equal(
@@ -133,7 +133,7 @@ def test_drop_column_round_trip(spark, tmp_path, tmp_table):
     )
 
     # compaction across all three versions lands every file on v3
-    eng.table.compact_buckets()
+    eng.table.compact_groups()
     after = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
     assert "lang" not in after.columns
     after["html"] = after["html"].map(lambda b: bytes(b) if b is not None else None)

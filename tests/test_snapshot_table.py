@@ -27,10 +27,10 @@ def test_rollback_restores_prior_state(spark, tmp_path, tmp_table):
 
 
 def test_expire_snapshots_frees_files_keeps_state(spark, tmp_path, tmp_table):
-    # CoW mode: every epoch rewrites touched buckets, so expired
-    # snapshots hold unreferenced files (MoR deltas stay referenced
-    # until compaction — covered separately below).
-    eng = _mk_engine(spark, tmp_path, tmp_table, table_mode="cow")
+    # compaction after every second delta layer: later snapshots no
+    # longer reference the collapsed delta files, so expiring the older
+    # snapshots frees them
+    eng = _mk_engine(spark, tmp_path, tmp_table, compact_max_deltas=2)
     eng.run()
     before = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
     deleted = eng.table.expire_snapshots(keep_last=1)
@@ -43,14 +43,12 @@ def test_mor_compaction_preserves_state_and_frees_deltas(spark, tmp_path, tmp_ta
     """MoR: deltas stack per epoch; compaction collapses them into base
     files without changing the logical table, after which expire frees
     the old delta files."""
-    eng = _mk_engine(
-        spark, tmp_path, tmp_table, table_mode="mor", compact_max_deltas=0
-    )  # 0 = never auto-compact
+    eng = _mk_engine(spark, tmp_path, tmp_table, compact_max_deltas=0)  # never auto-compact
     eng.run()
     depth = eng.table.delta_depth()
     assert depth and max(depth.values()) >= 2  # 4 epochs of deltas stacked
     before = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
-    eng.table.compact_buckets()
+    eng.table.compact_groups()
     assert eng.table.delta_depth() == {}
     after = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
     assert before.equals(after)
@@ -65,12 +63,10 @@ def test_grouped_delta_partial_compaction(spark, tmp_path, tmp_table):
     other groups' delta stacks in place — the bounded-maintenance property
     that replaces whole-table compaction at scale."""
     eng = _mk_engine(
-        spark, tmp_path, tmp_table, table_mode="mor",
-        compact_max_deltas=0, n_delta_groups=4,
+        spark, tmp_path, tmp_table, compact_max_deltas=0, n_delta_groups=4,
     )
     eng.run()
     depth = eng.table.delta_depth()
-    assert -1 not in depth  # engine path writes grouped, never spanning
     assert depth and set(depth) <= set(range(4))
     before = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
     g = min(depth)
@@ -83,24 +79,6 @@ def test_grouped_delta_partial_compaction(spark, tmp_path, tmp_table):
     assert eng.table.delta_depth() == {}
     after = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
     assert before.equals(after)
-
-
-def test_mor_equals_cow_final_state(spark, tmp_path, tmp_table):
-    """The two physical strategies are one logical MERGE: byte-equal."""
-    eng_mor = _mk_engine(
-        spark, tmp_path, str(tmp_table) + "_mor", table_mode="mor", compact_max_deltas=2
-    )
-    eng_mor.run()
-    eng_cow = CDCEngine(
-        spark,
-        str(tmp_path / "wal"),
-        str(tmp_table) + "_cow",
-        config=EngineConfig(epoch_size=1_000, n_buckets=4, table_mode="cow"),
-    )
-    eng_cow.run()
-    a = eng_mor.read_table().toPandas().sort_values("url").reset_index(drop=True)
-    b = eng_cow.read_table().toPandas().sort_values("url").reset_index(drop=True)
-    assert a[sorted(a.columns)].equals(b[sorted(b.columns)])
 
 
 def test_orphaned_staging_files_are_expired(spark, tmp_path, tmp_table):
@@ -133,8 +111,7 @@ def test_compaction_equilibrium_keeps_depth_bounded(spark, tmp_path, tmp_table):
     size (no whole-table rewrites, bounded work per epoch)."""
     eng = _mk_engine(
         spark, tmp_path, tmp_table, n_events=8_000, epoch=500,
-        table_mode="mor", compact_max_deltas=2, n_delta_groups=4,
-        compact_groups_per_epoch=2,
+        compact_max_deltas=2, n_delta_groups=4,
     )
     results = eng.run()  # 16 epochs
     assert len(results) == 16
@@ -262,22 +239,6 @@ def test_append_log_torn_tail_repair(tmp_path):
     reread = AppendLog(p).entries()
     assert [e["epoch_id"] for e in reread] == [0, 1, 2, 3, 4, 6]
 
-    # legacy whole-file ledger.json is honored as a read-only prefix
-    import json
-
-    legacy = str(tmp_path / "old" )
-    os.makedirs(legacy)
-    with open(os.path.join(legacy, "ledger.json"), "w") as f:
-        json.dump({"entries": [{"epoch_id": 100, "end_seq": 1}]}, f)
-    mixed = AppendLog(os.path.join(legacy, "ledger.jsonl"),
-                      legacy_json_path=os.path.join(legacy, "ledger.json"))
-    mixed.append({"epoch_id": 101, "end_seq": 2})
-    assert [e["epoch_id"] for e in mixed.entries()] == [100, 101]
-    assert [e["epoch_id"] for e in AppendLog(
-        os.path.join(legacy, "ledger.jsonl"),
-        legacy_json_path=os.path.join(legacy, "ledger.json"),
-    ).entries()] == [100, 101]
-
 
 def test_tombstone_retention_window(spark, tmp_path, tmp_table):
     """Compaction drops tombstones past the replay window and keeps those
@@ -304,7 +265,7 @@ def test_tombstone_retention_window(spark, tmp_path, tmp_table):
     # event (older warc_ts than the delete) still loses on read
     t1 = str(tmp_path / "t_keep")
     eng = CDCEngine(spark, wal, t1, config=EngineConfig(
-        epoch_size=100, n_buckets=4, table_mode="mor"))
+        epoch_size=100, n_buckets=4))
     eng.run()
     eng.table.compact_groups(tombstone_retention_seqs=1_000)
     with_tomb = eng.read_table(include_tombstones=True)
@@ -312,7 +273,7 @@ def test_tombstone_retention_window(spark, tmp_path, tmp_table):
     late = [(63, "update", "https://a.example.com/x", ts(150), b"<html>late</html>", None)]
     spark.createDataFrame(late, schema=CHANGE_EVENT_SCHEMA).write.mode("append").parquet(wal)
     eng2 = CDCEngine(spark, wal, t1, config=EngineConfig(
-        epoch_size=100, n_buckets=4, table_mode="mor"))
+        epoch_size=100, n_buckets=4))
     eng2.run()
     assert eng2.read_table().filter(F.col("url") == "https://a.example.com/x").count() == 0
 
@@ -322,7 +283,7 @@ def test_tombstone_retention_window(spark, tmp_path, tmp_table):
     wal2 = str(tmp_path / "wal_ts2")
     spark.createDataFrame(rows, schema=CHANGE_EVENT_SCHEMA).write.parquet(wal2)
     eng3 = CDCEngine(spark, wal2, t2, config=EngineConfig(
-        epoch_size=100, n_buckets=4, table_mode="mor"))
+        epoch_size=100, n_buckets=4))
     eng3.run()
     live_before = eng3.read_table().count()
     eng3.table.compact_groups(tombstone_retention_seqs=10)  # cutoff = 62-10 = 52 > 2

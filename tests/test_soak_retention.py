@@ -43,7 +43,7 @@ def test_soak_flat_epoch_cost_and_bounded_tombstones(spark, tmp_path):
     eng = CDCEngine(
         spark, wal, table,
         config=EngineConfig(
-            epoch_size=EPOCH, n_buckets=32, table_mode="mor",
+            epoch_size=EPOCH, n_buckets=32,
             tombstone_retention_seqs=RETENTION,
         ),
     )

@@ -43,15 +43,11 @@ def test_late_insert_cannot_resurrect_deleted_key(spark, tmp_path, tmp_table):
         ],
         p,
     )
-    for mode in ("mor", "cow"):
-        eng = CDCEngine(
-            spark,
-            p,
-            str(tmp_path / f"t_{mode}"),
-            config=EngineConfig(epoch_size=2, n_buckets=2, table_mode=mode),
-        )
-        eng.run()
-        assert _urls(eng) == set(), f"{mode}: late older insert resurrected a deleted key"
+    eng = CDCEngine(
+        spark, p, str(tmp_path / "t1"), config=EngineConfig(epoch_size=2, n_buckets=2)
+    )
+    eng.run()
+    assert _urls(eng) == set(), "late older insert resurrected a deleted key"
 
 
 def test_late_delete_loses_to_newer_insert(spark, tmp_path, tmp_table):
@@ -65,15 +61,11 @@ def test_late_delete_loses_to_newer_insert(spark, tmp_path, tmp_table):
         ],
         p,
     )
-    for mode in ("mor", "cow"):
-        eng = CDCEngine(
-            spark,
-            p,
-            str(tmp_path / f"t2_{mode}"),
-            config=EngineConfig(epoch_size=1, n_buckets=2, table_mode=mode),
-        )
-        eng.run()
-        assert _urls(eng) == {"u2"}, f"{mode}: older delete removed a newer row"
+    eng = CDCEngine(
+        spark, p, str(tmp_path / "t2"), config=EngineConfig(epoch_size=1, n_buckets=2)
+    )
+    eng.run()
+    assert _urls(eng) == {"u2"}, "older delete removed a newer row"
 
 
 def test_tombstone_survives_compaction_then_still_guards(spark, tmp_path, tmp_table):
@@ -90,10 +82,10 @@ def test_tombstone_survives_compaction_then_still_guards(spark, tmp_path, tmp_ta
     )
     table = str(tmp_path / "t3")
     eng = CDCEngine(
-        spark, p1, table, config=EngineConfig(epoch_size=2, n_buckets=2, table_mode="mor")
+        spark, p1, table, config=EngineConfig(epoch_size=2, n_buckets=2)
     )
     eng.run()
-    eng.table.compact_buckets()
+    eng.table.compact_groups()
     assert _urls(eng) == set()
     # WAL grows with the late event
     _wal(
@@ -106,7 +98,7 @@ def test_tombstone_survives_compaction_then_still_guards(spark, tmp_path, tmp_ta
         p1,
     )
     eng2 = CDCEngine(
-        spark, p1, table, config=EngineConfig(epoch_size=2, n_buckets=2, table_mode="mor")
+        spark, p1, table, config=EngineConfig(epoch_size=2, n_buckets=2)
     )
     eng2.run()
     assert _urls(eng2) == set()
