@@ -79,11 +79,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return _extract_series(html)
 
 
-def with_text(df, html_col: str = "html", out_col: str = "text"):
-    """Attach the extracted-text column (Arrow batch transfer only)."""
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
-
-
 # ---------------------------------------------------------------------------
 # Deterministic language heuristic (stopword-count n-gram scoring)
 # ---------------------------------------------------------------------------

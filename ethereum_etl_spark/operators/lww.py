@@ -168,19 +168,3 @@ def lww_winner_seqs(
         winners = base.groupBy(*names).agg(F.max("__v").alias("__v"))
     return winners.select(F.col(f"__v.{seq_col}").alias(seq_col))
 
-
-def lww_collapse(
-    df: DataFrame,
-    key_cols: Sequence[str] = DEFAULT_KEYS,
-    version_cols: Sequence[str] = DEFAULT_VERSION,
-    method: str = "agg",
-    n_salt: int = 16,
-) -> DataFrame:
-    """Dispatch: one row per key, winning event's full row."""
-    if method == "window":
-        return lww_window(df, key_cols, version_cols)
-    if method == "agg":
-        return lww_agg(df, key_cols, version_cols)
-    if method == "salted":
-        return lww_salted(df, key_cols, version_cols, n_salt=n_salt)
-    raise ValueError(f"unknown LWW method: {method}")

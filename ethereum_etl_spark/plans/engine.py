@@ -8,7 +8,7 @@ lazy DataFrame lineage (Catalyst owns the task DAG) and the batch loop
 survives as the epoch loop:
 
     for each epoch (lo, hi] above the ledger high-watermark:
-        slice   = WAL WHERE seq > lo AND seq <= hi      (file-pruned scan)
+        slice   = WAL WHERE seq > lo AND seq <= hi      (overlapping files)
         winners = LWW winner seq per url                (op rides along)
         text    = vectorized html→text UDF              (winners ONLY —
                                                          UDF cost ∝ keys,
@@ -21,6 +21,10 @@ epoch_id is already in the ledger is skipped verbatim on resume; a crash
 anywhere before the append leaves only unreferenced files, so re-running
 the epoch converges to the identical state (the reference gets the same
 property from PK upserts — src/repositories/sqlite/base.py:159-171).
+
+Planning runs no Spark job: the WAL file index (``_wal_files``) keeps
+each immutable file's footer stats, and an epoch's scan and its lineage
+rows come from one listing of it.
 
 Skew: when an epoch's key histogram is degenerate (hot url prefixes), the
 LWW stage switches to the salted two-phase plan (operators/lww.py), chosen
@@ -47,6 +51,7 @@ from ethereum_etl_spark.operators.snapshot_table import (
     SnapshotTable,
 )
 from ethereum_etl_spark.schemas import (
+    CHANGE_EVENT_SCHEMA,
     PAGES_SCHEMA_V1,
     SchemaRegistry,
     conform_to_schema,
@@ -85,6 +90,12 @@ class AuditError(RuntimeError):
 
 class InjectedCrash(RuntimeError):
     """Raised by test-configured crash points (fault injection)."""
+
+
+class WalFileStatsError(RuntimeError):
+    """A non-empty WAL file whose footer carries no seq min/max: no epoch
+    can own it, so the engine refuses to plan or scan rather than skip
+    the file's events."""
 
 
 @dataclass
@@ -162,6 +173,7 @@ class CDCEngine:
         )
         self.lineage_root = os.path.join(table_root, "lineage")
         os.makedirs(self.lineage_root, exist_ok=True)
+        self._footers: dict[str, dict] = {}  # WAL file index, see _wal_files
         self._skew_memo: bool | None = None  # see SKEW_REPROBE_EVERY
         self._epochs_since_probe = 0
 
@@ -203,32 +215,19 @@ class CDCEngine:
 
     # ------------------------------------------------------------------
 
-    def _wal(self, refresh: bool = False) -> DataFrame:
-        """WAL scan, cached per engine instance: re-creating the reader
-        re-lists files and re-plans per epoch (~0.5s driver latency each);
-        a tail/run refreshes once per poll, not once per epoch."""
-        from ethereum_etl_spark.schemas import CHANGE_EVENT_SCHEMA
-
-        if refresh or getattr(self, "_wal_df", None) is None:
-            self._wal_df = self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.wal_path)
-            self._wal_footers = None  # file set may have changed
-        return self._wal_df
-
-    def _wal_file_stats(self) -> list[dict]:
-        """Per-file WAL stats from parquet footers, cached per listing:
+    def _wal_files(self) -> list[dict]:
+        """The WAL file index: a fresh listing of ``wal_path`` (the files
+        Spark's directory reader would read), each with its footer stats
         (path, rows, seq min/max from column stats, html uncompressed
-        bytes). WAL files are immutable, so footers are read once per
-        refresh — per-epoch lineage needs NO payload scan at all (the
-        Iceberg-manifest trick: file-level stats are metadata)."""
-        if getattr(self, "_wal_footers", None) is not None:
-            return self._wal_footers
+        bytes), 0-row files dropped. Published WAL files are immutable,
+        so a footer is read once per engine and no listing is cached."""
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
         paths = sorted(
             os.path.join(self.wal_path, fn)
             for fn in os.listdir(self.wal_path)
-            if fn.endswith(".parquet")
+            if fn.endswith(".parquet") and not fn.startswith(("_", "."))
         )
 
         def _one(path: str) -> dict:
@@ -243,6 +242,8 @@ class CDCEngine:
                     smin = st.min if smin is None else min(smin, st.min)
                     smax = st.max if smax is None else max(smax, st.max)
                 hbytes += g.column(html_i).total_uncompressed_size
+            if md.num_rows and (smin is None or smax is None):
+                raise WalFileStatsError(f"no seq min/max in the footer of {path}")
             return {
                 "path": path,
                 "rows": md.num_rows,
@@ -251,13 +252,10 @@ class CDCEngine:
                 "bytes": hbytes,
             }
 
+        new = [p for p in paths if p not in self._footers]
         with ThreadPoolExecutor(max_workers=32) as ex:
-            self._wal_footers = [f for f in ex.map(_one, paths) if f["rows"] > 0]
-        return self._wal_footers
-
-    def wal_max_seq(self) -> int:
-        row = self._wal(refresh=True).agg(F.max("seq").alias("m")).collect()[0]
-        return -1 if row["m"] is None else int(row["m"])
+            self._footers.update(zip(new, ex.map(_one, new)))
+        return [self._footers[p] for p in paths if self._footers[p]["rows"] > 0]
 
     def plan_epochs(self, up_to_seq: int | None = None) -> list[tuple[int, int, int]]:
         """(epoch_id, start_seq_exclusive, end_seq_inclusive) above the
@@ -265,17 +263,32 @@ class CDCEngine:
         resumed run re-plans IDENTICAL epochs (determinism under crash)
         and a later, longer WAL can never collide with a committed id."""
         hw = self.high_watermark()
-        top = self.wal_max_seq() if up_to_seq is None else up_to_seq
+        if up_to_seq is None:
+            up_to_seq = max((f["seq_max"] for f in self._wal_files()), default=-1)
         size = self.config.epoch_size
         out = []
         lo = hw
-        while lo < top:
-            hi = min(lo + size, top)
+        while lo < up_to_seq:
+            hi = min(lo + size, up_to_seq)
             out.append((lo + 1, lo, hi))
             lo = hi
         return out
 
     # ------------------------------------------------------------------
+
+    def _epoch_slice(self, lo: int, hi: int) -> tuple[DataFrame, list[dict]]:
+        """The epoch's WAL slice (lo, hi], read from only the files it
+        overlaps, and its lineage files, both from ONE listing. A file
+        belongs to the epoch covering its first seq (attributed whole, so
+        lineage rows+bytes tile the WAL exactly, like Iceberg manifests)."""
+        files = self._wal_files()
+        paths = [f["path"] for f in files if f["seq_min"] <= hi and f["seq_max"] > lo]
+        if paths:
+            wal = self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(*paths)
+        else:
+            wal = self.spark.createDataFrame([], CHANGE_EVENT_SCHEMA)
+        slice_df = wal.filter((F.col("seq") > lo) & (F.col("seq") <= hi))
+        return slice_df, [f for f in files if lo < f["seq_min"] <= hi]
 
     def _maybe_crash(self, point: str) -> None:
         if point in self.config.crash_points:
@@ -309,9 +322,10 @@ class CDCEngine:
         'auto' re-probes), none of which shuffles html bytes:
 
         job 1 (light scan): exact event count + approximate key count
-               over a payload-FREE projection (seq/url/warc_ts/op);
-               per-file lineage stats come from cached parquet footers —
-               pure metadata, zero payload IO.
+               over a payload-FREE projection (seq/url/warc_ts/op) of
+               the files the epoch overlaps; per-file lineage stats come
+               from the same listing's parquet footers — pure metadata,
+               zero payload IO.
         job 2 (the write): winning seqs from ONE partial-agg shuffle of
                128-bit key fingerprints (operators/lww.py
                lww_winner_seqs), a broadcast seq equi-join against the
@@ -329,7 +343,7 @@ class CDCEngine:
         if done is not None:  # exactly-once resume: skip verbatim
             return done
 
-        slice_df = self._wal().filter((F.col("seq") > lo) & (F.col("seq") <= hi))
+        slice_df, lineage = self._epoch_slice(lo, hi)
         # -- job 1: payload-FREE projection (html is read exactly once per
         #    epoch, in the write job): one global agg gives the exact
         #    event count plus the approximate key count that feeds the
@@ -343,15 +357,6 @@ class CDCEngine:
             F.approx_count_distinct("url").alias("n_keys_est"),
         ).collect()[0]
         n_events = int(total["row_count"])
-        # a WAL file belongs to the epoch that covers its first seq
-        # (boundary files are attributed whole, so lineage rows+bytes
-        # tile the WAL exactly across epochs; Iceberg manifests carry
-        # file-granular stats the same way)
-        lineage = [
-            f
-            for f in self._wal_file_stats()
-            if f["seq_min"] is not None and lo < f["seq_min"] <= hi
-        ]
         version = self.registry.version_at(hi)
         snapshot_id = self.table.new_snapshot_id()
         entry = {"epoch_id": epoch_id, "start_seq": lo, "end_seq": hi, "n_events": n_events}

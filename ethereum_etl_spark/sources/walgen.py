@@ -142,9 +142,10 @@ def write_wal(df: DataFrame, path: str, n_files: int = 32) -> None:
     """Persist the WAL as seq-range-partitioned parquet.
 
     ``repartitionByRange(seq) + sortWithinPartitions(seq)`` gives each file
-    a tight seq min/max, so epoch slices (`seq BETWEEN lo AND hi`) prune
-    whole files at scan time — the 100 TB path reads only the epoch's
-    files, not the whole log.
+    a tight seq min/max in its footer. The engine's WAL file index
+    (``CDCEngine._wal_files``) reads those footers, so an epoch slice
+    (`seq BETWEEN lo AND hi`) opens only the files its range overlaps —
+    the 100 TB path reads only the epoch's files, not the whole log.
     """
     (
         df.repartitionByRange(n_files, "seq")
@@ -152,9 +153,3 @@ def write_wal(df: DataFrame, path: str, n_files: int = 32) -> None:
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def read_wal(spark: SparkSession, path: str) -> DataFrame:
-    from ethereum_etl_spark.schemas import CHANGE_EVENT_SCHEMA
-
-    return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(path)

@@ -66,11 +66,6 @@ def stream_apply(
         # The batch tells us how far the WAL has advanced; the ENGINE
         # re-reads its own seq-pruned slices so epoch boundaries (and
         # therefore the exactly-once ledger) are identical to replay.
-        # The engine's cached WAL reader froze its file listing at first
-        # use — refresh it here, or epochs covering files appended since
-        # then would scan 0 rows and commit an empty epoch that advances
-        # the high-watermark past unread events (silent data loss).
-        engine._wal(refresh=True)
         row = batch_df.agg(F.max("seq").alias("m")).collect()[0]
         if row["m"] is None:
             return

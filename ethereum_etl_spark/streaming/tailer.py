@@ -4,10 +4,11 @@ Reference analog (SURVEY.md §3.2): ``python -m src.clis.realtime_ws`` —
 a WebSocket ``newHeads`` subscription that turns every pushed block into
 a one-block DAG (src/clis/realtime_ws.py:37-84). There is no external
 push source in the sandbox, so the tail is a poll loop over the
-append-only WAL directory: discover the new max seq, run the pending
-epochs through the exact same engine code path as historical replay
-(deliberately — one code path means replay and tail provably agree),
-sleep, repeat. Backpressure = the epoch_size knob (the
+append-only WAL directory: plan from the engine's WAL file index (a
+directory listing plus the footers of files not seen before — no Spark
+job), run the pending epochs through the exact same engine code path as
+historical replay (deliberately — one code path means replay and tail
+provably agree), sleep, repeat. Backpressure = the epoch_size knob (the
 ``maxOffsetsPerTrigger`` analog; reference: ``pending_queue_size`` gates
 at src/clis/historical.py:68-71).
 

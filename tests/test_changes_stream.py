@@ -70,7 +70,6 @@ def test_stream_maintains_aggregate_across_growing_wal(spark, tmp_path, tmp_tabl
         F.col("seq") >= 3_000
     )
     extra.write.mode("append").parquet(wal)
-    eng._wal(refresh=True)
     eng.run()
     assert stream.drain(apply_window) == 1
 

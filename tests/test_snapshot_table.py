@@ -2,6 +2,9 @@
 
 import os
 
+import pandas as pd
+
+from ethereum_etl_spark.oracle import expected_final_state
 from ethereum_etl_spark.plans.engine import CDCEngine, EngineConfig
 from ethereum_etl_spark.sources.walgen import WalConfig, gen_wal, write_wal
 from ethereum_etl_spark.streaming.tailer import tail
@@ -156,7 +159,6 @@ def test_snapshot_isolation_read_during_write(spark, tmp_path, tmp_table):
     full.filter(F.col("seq") >= 1_500).repartitionByRange(2, "seq").write.mode(
         "append"
     ).parquet(p)
-    eng._wal(refresh=True)
     eng.run()  # commits a second epoch while old_reader is still alive
 
     old_after = old_reader.toPandas().sort_values("url").reset_index(drop=True)
@@ -166,9 +168,12 @@ def test_snapshot_isolation_read_during_write(spark, tmp_path, tmp_table):
 
 
 def test_tailer_applies_growing_wal(spark, tmp_path, tmp_table):
-    """Tail mode: WAL grows between polls; engine catches up exactly-once."""
+    """Tail mode: WAL grows between polls; engine catches up exactly-once.
+    The third part is applied by ``run(up_to_seq=...)``, which must scan
+    the files that landed since the last plan rather than commit
+    0-event epochs past them."""
     p = str(tmp_path / "wal_tail")
-    full = gen_wal(spark, WalConfig(n_events=3_000, n_urls=400))
+    full = gen_wal(spark, WalConfig(n_events=4_500, n_urls=400))
     from pyspark.sql import functions as F
 
     write_wal(full.filter(F.col("seq") < 1_500), p, n_files=2)
@@ -176,13 +181,24 @@ def test_tailer_applies_growing_wal(spark, tmp_path, tmp_table):
     r1 = tail(eng, max_polls=1)
     assert sum(x.n_events for x in r1) == 1_500
     # WAL grows (append-only: new files, old untouched)
-    full.filter(F.col("seq") >= 1_500).repartitionByRange(2, "seq").write.mode(
-        "append"
-    ).parquet(p)
+    full.filter((F.col("seq") >= 1_500) & (F.col("seq") < 3_000)).repartitionByRange(
+        2, "seq"
+    ).write.mode("append").parquet(p)
     r2 = tail(eng, max_polls=1)
     assert sum(x.n_events for x in r2) == 1_500
     assert eng.table.high_watermark() == 2_999
     assert eng.read_table().count() == eng.read_table().select("url").distinct().count()
+    full.filter(F.col("seq") >= 3_000).repartitionByRange(2, "seq").write.mode(
+        "append"
+    ).parquet(p)
+    r3 = eng.run(up_to_seq=4_499)
+    assert sum(x.n_events for x in r3) == 1_500
+    got = eng.read_table().toPandas().sort_values("url").reset_index(drop=True)
+    got["html"] = got["html"].map(lambda b: bytes(b) if b is not None else None)
+    exp = expected_final_state(spark.read.parquet(p).toPandas()).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        got[["url", "warc_ts", "seq", "html", "text"]], exp, check_dtype=False
+    )
 
 
 def test_reader_snapshot_isolation_and_time_travel(spark, tmp_path, tmp_table):
