@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -59,8 +60,77 @@ _GROUP_DIR = "__group_dir"
 
 
 def bucket_expr(key_col: str, n_buckets: int):
-    """Identity-stable hash bucket for a key (same fn everywhere)."""
+    """Identity-stable hash bucket for a key (same fn everywhere; its
+    driver-side twin for a single key is ``bucket_of``)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int (little-endian lanes)."""
+    n = len(data)
+    off = 0
+    if n >= 32:
+        v1 = (seed + _P1 + _P2) & _M64
+        v2 = (seed + _P2) & _M64
+        v3 = seed
+        v4 = (seed - _P1) & _M64
+        while off <= n - 32:
+            a, b, c, d = struct.unpack_from("<4Q", data, off)
+            v1, v2, v3, v4 = _round(v1, a), _round(v2, b), _round(v3, c), _round(v4, d)
+            off += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _round(0, v)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while off <= n - 8:
+        (k,) = struct.unpack_from("<Q", data, off)
+        h = (_rotl(h ^ _round(0, k), 27) * _P1 + _P4) & _M64
+        off += 8
+    if off <= n - 4:
+        (k,) = struct.unpack_from("<I", data, off)
+        h = (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        off += 4
+    while off < n:
+        h = _rotl(h ^ (data[off] * _P5 & _M64), 11) * _P1 & _M64
+        off += 1
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(key: str, n_buckets: int) -> int:
+    """The bucket ``bucket_expr`` assigns ``key``, computed on the driver.
+
+    This is ``bucket_expr``'s driver-side twin and must stay
+    bit-identical to it: Spark's ``xxhash64`` is XXH64 with seed 42 over
+    the string's UTF-8 bytes, read as a signed long, and ``pmod`` takes
+    the non-negative remainder (Python's ``%`` for a positive divisor).
+    ``tests/test_lookup.py`` pins the parity against Spark.
+    """
+    h = _xxh64(key.encode("utf-8"), 42)
+    if h >= 1 << 63:
+        h -= 1 << 64
+    return h % n_buckets
 
 
 class AppendLog:
@@ -446,21 +516,30 @@ class SnapshotTable:
         return {g: len(s) for g, s in layers.items()}
 
     def read_key(
-        self, key, snapshot_id: str | None = None
+        self, key: str, snapshot_id: str | None = None
     ) -> tuple[DataFrame | None, int, int]:
         """Point lookup with manifest file-skipping.
 
         Returns (row DataFrame or None, files_scanned, files_total).
-        The key's hash bucket selects its base files and its compaction
-        group selects the delta files that could hold newer versions —
+        The key's hash bucket — computed on the driver by ``bucket_of``,
+        no Spark job — selects its base files and its compaction group
+        selects the delta files that could hold newer versions;
         everything else is skipped at PLAN time from the manifest, so a
         lookup touches ~1/n_buckets of base bytes + ~1/n_delta_groups of
         delta bytes regardless of table size (the reference serves point
         reads from PK indexes — src/repositories/sqlite/base.py:92-101;
-        here the bucket layout IS the index). The surviving rows for the
-        key are LWW-collapsed; a winning tombstone yields an empty
-        result (key deleted), same contract as ``read``.
+        here the bucket layout IS the index). The key's rows are reduced
+        to its LWW winner by a top-1 in version order (warc_ts desc,
+        nulls last, then seq desc — the order of ``max(struct(warc_ts,
+        seq))``); a winning tombstone yields an empty result (key
+        deleted), same contract as ``read``. Nothing runs until the
+        caller collects, and the collect is one Spark job.
+
+        Keys are strings (writers hash the string key column); any other
+        type raises ``TypeError``.
         """
+        if not isinstance(key, str):
+            raise TypeError(f"read_key takes a str key, got {type(key).__name__}")
         snap = (
             self.read_snapshot_meta(snapshot_id)
             if snapshot_id is not None
@@ -468,12 +547,7 @@ class SnapshotTable:
         )
         if snap is None:
             return None, 0, 0
-        # same hash expression the writers use, evaluated on a 1-row frame
-        b = (
-            self.spark.createDataFrame([(key,)], [self.key_col])
-            .select(bucket_expr(self.key_col, self.n_buckets).alias("b"))
-            .collect()[0]["b"]
-        )
+        b = bucket_of(key, self.n_buckets)
         g = group_of_bucket(b, self.n_delta_groups)
         files = [
             f
@@ -486,7 +560,9 @@ class SnapshotTable:
         df = self._read_files(files, snap.schema_version)
         df = df.filter(F.col(self.key_col) == key)
         if any(f.kind == "delta" for f in files):
-            df = self._collapse_payload_light(df)
+            df = df.orderBy(
+                F.col("warc_ts").desc_nulls_last(), F.col("seq").desc()
+            ).limit(1)
         df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
         return df.drop(TOMBSTONE_COL, BUCKET_COL), len(files), len(snap.files)
 

@@ -71,10 +71,10 @@ def test_stream_apply_continuous_returns_live_handle(spark, tmp_path, tmp_table)
 def test_stream_apply_sees_wal_files_appended_after_engine_cached_reader(
     spark, tmp_path, tmp_table
 ):
-    """Regression: the engine caches its WAL reader (file listing frozen at
-    first use). A stream batch covering files appended later must refresh
-    that reader — otherwise the new epochs read 0 rows, still commit, and
-    the high-watermark silently advances past unread events."""
+    """Regression: every epoch lists the WAL afresh, so a stream batch
+    covering files that landed after an earlier ``run()`` reads them —
+    a frozen listing would make the new epochs read 0 rows, still
+    commit, and silently advance the high-watermark past unread events."""
     p = str(tmp_path / "wal")
     full = gen_wal(spark, WalConfig(n_events=4_000, n_urls=600))
     (
@@ -84,7 +84,7 @@ def test_stream_apply_sees_wal_files_appended_after_engine_cached_reader(
     eng = CDCEngine(
         spark, p, tmp_table, config=EngineConfig(epoch_size=1_000, n_buckets=4)
     )
-    r1 = eng.run()  # caches the WAL reader with only the first files listed
+    r1 = eng.run()  # sees only the files landed so far
     assert sum(r.n_events for r in r1) == 2_500
 
     (
